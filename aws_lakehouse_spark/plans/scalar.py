@@ -12,8 +12,12 @@ Cross-engine gotchas handled here (each verified against DuckDB 1.0):
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import DoubleType
 
 from aws_lakehouse_spark.catalog import load_table
 from aws_lakehouse_spark.functions import (
@@ -704,6 +708,14 @@ def source_python_udtf_sentences_q(
     )
 
 
+# Series -> scalar hints make this a grouped-aggregate pandas UDF; the
+# hints resolve against this module's pandas import, and a DataType
+# (not a DDL string) keeps import free of any Spark session
+@pandas_udf(DoubleType())
+def _geomean(v: pd.Series) -> float:
+    return float(np.exp(np.log(v.to_numpy()).mean()))
+
+
 @register(
     "udaf_grouped_geomean",
     oracle="""
@@ -728,18 +740,6 @@ def source_python_udtf_sentences_q(
     "UDAF exists for aggregations with no built-in decomposition.",
 )
 def udaf_grouped_geomean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.pandas.functions import PandasUDFType
-
-    # explicit GROUPED_AGG eval type: the module-level `from
-    # __future__ import annotations` turns signature hints into
-    # strings, which the hint-inference path can't resolve for a
-    # locally-imported pandas alias
-    @pandas_udf("double", PandasUDFType.GROUPED_AGG)
-    def geomean(v):
-        return float(np.exp(np.log(v.to_numpy()).mean()))
-
     orders = load_table(spark, sf_dir, "orders")
     # a GROUPED_AGG pandas UDF cannot share an agg() with JVM
     # aggregates (INVALID_PANDAS_UDF_PLACEMENT) — the count comes
@@ -748,7 +748,7 @@ def udaf_grouped_geomean_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
     geo = orders.groupBy("o_orderpriority").agg(
-        F.round(geomean("o_totalprice"), 4).alias("geomean_price")
+        F.round(_geomean("o_totalprice"), 4).alias("geomean_price")
     )
     return counts.join(geo, "o_orderpriority").orderBy("o_orderpriority")
 

@@ -914,6 +914,12 @@ def test_minhash_signature_str_path_equals_column_path(spark):
         "doc_id", *minhash_signature(_shingles_sql("text", 3), 4)
     ).collect()}
     assert old == new
+    # a column name that only parses backtick-quoted
+    quoted = df.withColumnRenamed("text", "order text")
+    new_quoted = {r[0]: tuple(r)[1:] for r in quoted.select(
+        "doc_id", *minhash_signature(_shingles_sql("order text", 3), 4)
+    ).collect()}
+    assert new_quoted == old
 
 
 def test_dot_norm_cosine_str_path_equals_column_path(spark):

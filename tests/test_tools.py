@@ -1,7 +1,10 @@
-"""Contracts of the operational tools the round workflow depends on
-(window rotation, A/B methodology helpers) — cheap pure-Python checks,
+"""Contracts of the operational tools (parity comparison, bench gate,
+fixture scaling) and of the tools directory itself — cheap checks,
 no Spark session."""
 
+import ast
+import glob
+import importlib.util
 import os
 import sys
 
@@ -12,65 +15,11 @@ sys.path.insert(
 )
 
 from check_parity import compare  # noqa: E402
-from rotate_window import (  # noqa: E402
-    WINDOW,
-    graded_by_round,
-    graded_latest,
-    next_window,
-    taint_files,
-)
+from make_sfN import source_unit_factor  # noqa: E402
 
 from aws_lakehouse_spark.plans import REGISTRY  # noqa: E402
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_next_window_is_full_and_never_graded_first():
-    graded = graded_by_round()
-    window = next_window([])
-    assert len(window) == WINDOW
-    assert len(set(window)) == WINDOW
-    # rows-only specs never occupy a graded slot
-    assert all(REGISTRY[n].oracle is not None for n in window)
-    # never-graded queries fill the window before any re-verification
-    ungraded_in = [n for n in window if n not in graded]
-    n_ungraded_total = sum(
-        1
-        for n, s in REGISTRY.items()
-        if s.oracle is not None and n not in graded
-    )
-    assert len(ungraded_in) == min(WINDOW, n_ungraded_total)
-
-
-def test_next_window_pins_lead_the_window():
-    # pins lead regardless of grading status: since round 8, an
-    # already-graded pin is a RE-VERIFY slot (the r7 advice — a
-    # rewritten query must be re-gradable by the driver), so any
-    # oracle-backed names are pinnable
-    names = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
-    pins = [names[-1], names[0]]
-    window = next_window(pins)
-    assert window[:2] == pins
-
-
-def test_next_window_regrades_already_graded_pins():
-    graded = graded_latest()
-    already = sorted(n for n in graded if REGISTRY.get(n) is not None)
-    if not already:
-        pytest.skip("no graded queries yet")
-    pins = already[:3]
-    window = next_window(pins)
-    assert window[: len(pins)] == pins
-    # and never-graded debt still fills BEFORE stale re-verifies
-    ungraded = sorted(
-        n
-        for n, s in REGISTRY.items()
-        if s.oracle is not None and n not in graded
-    )
-    expect_next = [n for n in ungraded if n not in pins][
-        : WINDOW - len(pins)
-    ]
-    assert window[len(pins) : len(pins) + len(expect_next)] == expect_next
 
 
 def test_compare_flags_decimal_vs_double():
@@ -112,59 +61,6 @@ def test_compare_flags_decimal_vs_double():
         pd.DataFrame({"revenue": [Decimal("0.01")]}),
         pd.DataFrame({"revenue": [Decimal("0.01")]}),
     ) == []
-
-
-def test_next_window_rejects_duplicate_and_overflow_pins():
-    graded = graded_by_round()
-    ungraded = sorted(
-        n
-        for n, s in REGISTRY.items()
-        if s.oracle is not None and n not in graded
-    )
-    if not ungraded:
-        pytest.skip("grading debt cleared; no pinnable names")
-    with pytest.raises(SystemExit, match="duplicate"):
-        next_window([ungraded[0], ungraded[0]])
-    # > WINDOW pins would previously flip the fill slice negative and
-    # silently append nearly the whole ungraded queue
-    too_many = (ungraded * ((WINDOW // len(ungraded)) + 2))[: WINDOW + 1]
-    if len(set(too_many)) == len(too_many):
-        with pytest.raises(SystemExit, match="exceed"):
-            next_window(too_many)
-    else:
-        with pytest.raises(SystemExit):
-            next_window(too_many)
-
-
-def test_next_window_rejects_unknown_and_rows_only_pins(monkeypatch):
-    with pytest.raises(SystemExit, match="unknown"):
-        next_window(["no_such_query"])
-    # a rows-only pin must REFUSE loudly, not silently rotate a
-    # different window (round-5 advice): the driver's weaker
-    # rows-only check can't certify what a pin claims. The registry
-    # has no rows-only specs left (r8 retired embed_pca_project's),
-    # so fabricate one for the guard.
-    import dataclasses
-
-    any_spec = next(iter(REGISTRY.values()))
-    fake = dataclasses.replace(any_spec, name="fake_rows_only", oracle=None)
-    monkeypatch.setitem(REGISTRY, "fake_rows_only", fake)
-    with pytest.raises(SystemExit, match="excluded"):
-        next_window(["fake_rows_only"])
-
-
-def test_taint_files_follows_package_imports():
-    # the --changed standing rule (r7 verdict item 1) keys off the
-    # ast import closure: a builder's taint must contain its own
-    # module AND the package modules it reaches transitively
-    spec = REGISTRY["dedup_incremental_minhash"]
-    taint = taint_files(spec.fn.__module__)
-    assert any(p.endswith("plans/llm_dedup.py") for p in taint), taint
-    # the plans module wraps llm/dedup.py — the r7 fusion batch
-    # changed exactly that file, which is what must trigger a re-pin
-    assert any(p.endswith("llm/dedup.py") for p in taint), taint
-    # and tainting never escapes the package
-    assert all(p.startswith("aws_lakehouse_spark") for p in taint)
 
 
 def _bench_module():
@@ -307,99 +203,6 @@ def test_raw_gate_passes_with_reason_on_pre_raw_baseline():
     assert g["pass"] and "reason" in g
 
 
-def test_window_rotation_not_fumbled():
-    """r10 fumble guard (r10 verdict item 2): the driver burned a full
-    round re-grading the identical 50 queries because
-    `rotate_window.py --apply` never ran. If the two most recent
-    CORRECTNESS artifacts already share one key set AND
-    ``_PRIORITY[:50]`` still equals it, a THIRD identical grading
-    round is queued — fail until the rotation lands. (The strict
-    one-round-ahead check — window must differ from the single latest
-    graded key set — lives in tools/artifact_check.py, which the
-    builder runs at round close; here the two-file form is used so a
-    healthy just-graded round can never read as red.)"""
-    import glob as _glob
-    import json as _json
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    files = sorted(_glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")))
-    if len(files) < 2:
-        pytest.skip("fewer than two graded rounds")
-    prev_keys = set(_json.load(open(files[-2])))
-    last_keys = set(_json.load(open(files[-1])))
-    window = set(list(REGISTRY)[:50])
-    assert not (prev_keys == last_keys == window), (
-        "the last two driver rounds graded the identical window and "
-        "_PRIORITY[:50] still equals it — run "
-        "`python tools/rotate_window.py --changed --apply`"
-    )
-
-
-def test_artifact_check_trips_on_any_red(tmp_path, monkeypatch, capsys):
-    """The round-close tripwire (r10 verdict item 6): all-green
-    synthetic artifacts exit 0; any single red artifact (here: a red
-    bench gate, then an unrotated window) exits 1 and names it."""
-    import json as _json
-
-    import artifact_check
-
-    def write(name, obj):
-        (tmp_path / name).write_text(_json.dumps(obj))
-
-    write("BENCH_DETAIL.json", {"gate": {"pass": True, "baseline_round": 11}})
-    write(
-        "CORRECTNESS_r11.json",
-        {
-            "some_query_not_in_window": {
-                "rows_match": True,
-                "schema_match": True,
-                "hash_match": True,
-            }
-        },
-    )
-    parity = "pass q1: 1 rows\n" * 328
-    (tmp_path / "PARITY_SF001_r11.txt").write_text(parity)
-    (tmp_path / "PARITY_SF1_r11.txt").write_text(parity)
-    write("SHUFFLE_GATE.json", {"pass": True, "baseline_round": 10})
-    write("COPYCHECK.json", {"flagged": []})
-    write("LEAKCHECK.json", {"n_hits": 0})
-    monkeypatch.setattr(artifact_check, "REPO", str(tmp_path))
-    assert artifact_check.main() == 0
-    capsys.readouterr()
-
-    # a red bench gate trips it
-    write("BENCH_DETAIL.json", {"gate": {"pass": False, "baseline_round": 11}})
-    assert artifact_check.main() == 1
-    assert "bench_gate      FAIL" in capsys.readouterr().out
-    write("BENCH_DETAIL.json", {"gate": {"pass": True, "baseline_round": 11}})
-
-    # an unrotated window (graded keys == _PRIORITY[:50]) trips it
-    window = list(REGISTRY)[:50]
-    write(
-        "CORRECTNESS_r11.json",
-        {
-            n: {"rows_match": True, "schema_match": True, "hash_match": True}
-            for n in window
-        },
-    )
-    assert artifact_check.main() == 1
-    assert "window_rotated  FAIL" in capsys.readouterr().out
-
-    # a stale parity artifact (older round than the graded round) trips it
-    write(
-        "CORRECTNESS_r12.json",
-        {
-            "another_query": {
-                "rows_match": True,
-                "schema_match": True,
-                "hash_match": True,
-            }
-        },
-    )
-    assert artifact_check.main() == 1
-    assert "STALE" in capsys.readouterr().out
-
-
 def test_join_range_banded_oracle_vs_nested_loop():
     """r10 advice: the banded oracle uses the engine's own band-
     decomposition trick, so a shared FP-floor bug at a band boundary
@@ -501,3 +304,51 @@ def test_raw_gate_engine_canary_design_versioned():
     base["calib_engine_design"] = 2
     g = bench._gate(detail, base)
     assert g["max_canary_ratio"] > 2.5, g
+
+
+@pytest.mark.parametrize(
+    "n_orders, factor",
+    [(1_500, 1), (300_000, 2), (200_000, None)],
+)
+def test_make_sfn_unit_factor_accepts_divisors_and_multiples(
+    tmp_path, n_orders, factor
+):
+    """Sources below sf0.1 (orders count divides 150k) tile with the
+    sf0.1 key units; larger ones scale them by the whole multiple;
+    anything else is refused by name, not guessed."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        con.execute(
+            f"COPY (SELECT range AS o_orderkey FROM range({n_orders})) "
+            f"TO '{tmp_path}/orders.parquet' (FORMAT PARQUET)"
+        )
+        if factor is None:
+            with pytest.raises(ValueError, match=str(n_orders)):
+                source_unit_factor(con, str(tmp_path))
+        else:
+            assert source_unit_factor(con, str(tmp_path)) == factor
+
+
+def test_tools_imports_resolve(monkeypatch):
+    """Every module a tool imports, function-scoped imports included,
+    must resolve with tools/ and the repo root on sys.path — a tool
+    importing a deleted sibling fails here, not mid-sweep."""
+    monkeypatch.syspath_prepend(REPO)
+    monkeypatch.syspath_prepend(os.path.join(REPO, "tools"))
+    missing = []
+    for path in sorted(glob.glob(os.path.join(REPO, "tools", "*.py"))):
+        with open(path) as fh:
+            tree = ast.parse(fh.read(), filename=path)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.name for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.level == 0:
+                names = [node.module]
+            else:
+                continue
+            for name in names:
+                top = name.split(".")[0]
+                if importlib.util.find_spec(top) is None:
+                    missing.append(f"{os.path.basename(path)}: {top}")
+    assert not missing, missing

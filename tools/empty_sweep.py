@@ -450,32 +450,6 @@ def main() -> int:
         and a != str(rows)
     }
     registry = load_all()
-    if "--changed" in sys.argv:
-        # taint-scope the battery (r8 verdict item 8): the full
-        # 328-query sweep re-ran at every round close even when a
-        # round touched three files. Since r10 the taint unit is the
-        # query's transitive code-object fingerprint (r9 verdict
-        # item 2 — file-level closures re-tainted everything after
-        # any shared-module edit), anchored at the LAST round commit
-        # (the battery runs clean at every round close, so that head
-        # is the state the standing battery result certifies).
-        from code_fingerprint import registry_fingerprints
-        from rotate_window import fingerprints_at, round_commits
-
-        commits = round_commits()
-        anchor_round = max(commits)
-        old = fingerprints_at(commits[anchor_round])
-        current = registry_fingerprints()
-        for name in registry:
-            if old.get(name) != current.get(name):
-                only.add(name)
-        print(
-            f"--changed: {len(only)} queries tainted since the "
-            f"round-{anchor_round} head", flush=True,
-        )
-        if not only:
-            print("0 ok, 0 crash (nothing tainted)")
-            return 0
     unknown = only - set(registry)
     if unknown:
         raise SystemExit(f"unknown queries: {sorted(unknown)}")

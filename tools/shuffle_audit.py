@@ -211,20 +211,6 @@ def _gate(rows) -> int:
         f"shuffle gate vs r{base_round} baseline: {verdict}"
         + (f" — {failures}" if failures else "")
     )
-    # persist the verdict so tools/artifact_check.py (the round-close
-    # red-artifact tripwire, r10 verdict item 6) can read it without
-    # re-running the multi-minute audit
-    gate_path = os.path.join(REPO, "SHUFFLE_GATE.json")
-    json.dump(
-        {
-            "baseline_round": base_round,
-            "pass": not failures,
-            "failures": failures,
-            "not_in_baseline": new,
-        },
-        open(gate_path, "w"),
-        indent=1,
-    )
     return 1 if failures else 0
 
 
