@@ -5,11 +5,13 @@ The reference runs three Iceberg procedures per table nightly
 rewrite_data_files (binpack, 256 MB), remove_orphan_files. These are
 format-bound; the engine is format-aware:
 
-- Delta/Iceberg catalog available → issue the native procedure;
 - table carries the engine's own manifest log
   (``sources.snapshots`` — Delta/Iceberg jars are unobtainable in
   this sandbox, see that module's probe notes) → REAL snapshot
-  expiry and orphan-file removal against the manifest log;
+  expiry and orphan-file removal against the manifest log, whatever
+  the session's extensions say;
+- table location holds ``_delta_log`` and the session can run Delta
+  → issue the native procedure;
 - bare plain-Parquet tables → compaction is a real
   repartition-rewrite (small-file problem is format-independent);
   snapshot/orphan ops are documented no-ops (no snapshot metadata
@@ -28,13 +30,6 @@ from pyspark.sql import SparkSession
 TARGET_FILE_BYTES = 256 * 1024 * 1024  # ref iceberg_maintenance.py:66
 
 
-def _is_delta(spark: SparkSession) -> bool:
-    try:
-        return "io.delta" in spark.conf.get("spark.sql.extensions", "")
-    except Exception:
-        return False
-
-
 def _table_location(spark: SparkSession, table: str) -> str | None:
     try:
         for row in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
@@ -45,17 +40,29 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
     return None
 
 
-def _snapshot_log_path(spark: SparkSession, table: str,
-                       table_path: str | None) -> str | None:
-    """Path of the table's manifest log, if it has one."""
+def _format(spark: SparkSession, table: str,
+            table_path: str | None) -> tuple[str | None, str | None]:
+    """``(format, location)`` of one table: 'manifest' when the
+    location carries the engine's manifest log (checked first — the
+    log serves the table even in a Delta-enabled session), 'delta'
+    only when the location holds ``_delta_log`` AND this session can
+    run Delta (``format_backend.delta_runtime_available``), else None
+    (plain Parquet: no snapshot metadata). Decided per table, never
+    from session confs alone."""
     import os
 
-    from aws_lakehouse_spark.sources import snapshots
+    from aws_lakehouse_spark.sources import format_backend, snapshots
 
     path = table_path or _table_location(spark, table)
-    if path and os.path.isdir(os.path.join(path, snapshots.LOG_DIR)):
-        return path
-    return None
+    if not path:
+        return None, None
+    if os.path.isdir(os.path.join(path, snapshots.LOG_DIR)):
+        return "manifest", path
+    if os.path.isdir(
+        os.path.join(path, format_backend.DELTA_LOG_DIR)
+    ) and format_backend.delta_runtime_available(spark):
+        return "delta", path
+    return None, path
 
 
 def expire_snapshots(
@@ -66,11 +73,11 @@ def expire_snapshots(
     window. Delta: VACUUM; manifest-logged table (sources.snapshots):
     real manifest expiry; bare plain Parquet: no snapshot metadata
     exists → no-op."""
-    if _is_delta(spark):
+    fmt, path = _format(spark, table, table_path)
+    if fmt == "delta":
         spark.sql(f"VACUUM {table} RETAIN {retain_days * 24} HOURS")
         return {"table": table, "op": "expire_snapshots", "applied": True}
-    path = _snapshot_log_path(spark, table, table_path)
-    if path:
+    if fmt == "manifest":
         from aws_lakehouse_spark.sources import snapshots
 
         res = snapshots.expire_snapshots(
@@ -200,8 +207,8 @@ def remove_orphans(
     a younger unreferenced file may belong to an in-flight concurrent
     commit). Bare plain Parquet has no manifest to diff against →
     no-op (every file under the table location is live)."""
-    path = _snapshot_log_path(spark, table, table_path)
-    if path:
+    fmt, path = _format(spark, table, table_path)
+    if fmt == "manifest":
         from aws_lakehouse_spark.sources import snapshots
 
         return {

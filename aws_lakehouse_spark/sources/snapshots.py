@@ -31,6 +31,14 @@ segments, stats/bloom manifest pruning).
   live manifests and deletes unreferenced part files — the exact
   contract of Iceberg's remove_orphan_files.
 
+Default version: every reader, planner and ref operation that takes
+``version=None`` resolves it the same way (``_resolve``) — main's
+PUBLISHED head, never a staged write-audit-publish snapshot or a
+branch commit. An empty log, a log holding only staged/branch
+commits, and a version that was expired or never committed all raise
+``ValueError``; an explicit ``version`` may read any committed
+snapshot, staged ones included (the WAP audit path).
+
 Writer concurrency: the manifest commit is a put-if-absent (atomic
 exclusive create), so two writers racing for the same version can
 never clobber each other — exactly one commits, the other raises
@@ -38,7 +46,12 @@ never clobber each other — exactly one commits, the other raises
 contract: the caller re-reads the table state and retries). The
 reference's schedule is one-Glue-job-per-table, so conflicts are
 the exception path, not the steady state; on an object store the
-same commit maps to put-if-absent/CAS.
+same commit maps to put-if-absent/CAS. Tags and branch creation
+commit the same way; segments, branch moves and constraints are
+atomic replaces. A writer that dies mid-commit leaves only debris
+no manifest references (part files, segments, ``*.tmp`` files, a
+``__stage.<uuid>/`` directory), which ``remove_orphans`` reclaims
+once it is older than its grace period.
 """
 
 from __future__ import annotations
@@ -51,11 +64,14 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from aws_lakehouse_spark.sources import format_backend as _fmt
+
 LOG_DIR = "_snapshots"
 
-# remove_orphans only sweeps in-flight .json.tmp segment files older
-# than this (Iceberg remove_orphan_files' older_than contract): a
-# younger tmp may belong to a concurrent writer's imminent os.replace.
+# remove_orphans' default grace: it only sweeps unreferenced files,
+# tmp files and stage directories older than this (Iceberg
+# remove_orphan_files' older_than contract): a younger one may belong
+# to a concurrent writer's imminent rename or commit.
 _ORPHAN_TMP_GRACE_SECONDS = 300.0
 
 
@@ -75,8 +91,6 @@ def _backend(spark: SparkSession, table_path: str) -> str:
     Delta — see ``sources/format_backend.py``), else 'manifest'. In
     the jar-less sandbox this is always 'manifest', so routing is a
     no-op by construction."""
-    from aws_lakehouse_spark.sources import format_backend as _fmt
-
     return _fmt.backend_for(spark, table_path)
 
 
@@ -109,18 +123,46 @@ def _read_manifest_raw(table_path: str, version: int) -> dict:
         return json.load(fh)
 
 
+def _write_tmp(final: str, doc: dict) -> str:
+    """Write ``doc`` to a tmp file next to ``final``, named per call
+    (uuid) so concurrent writers — threads of one process included —
+    never share one; returns the tmp path. A crash leaves a ``*.tmp``
+    that no reader lists and ``remove_orphans`` reclaims."""
+    os.makedirs(os.path.dirname(final), exist_ok=True)
+    tmp = f"{final}.{uuid.uuid4().hex}.tmp"
+    with open(tmp, "w") as fh:
+        json.dump(doc, fh)
+    return tmp
+
+
+def _put_if_absent(final: str, doc: dict) -> bool:
+    """Create ``final`` holding ``doc`` unless it already exists;
+    False when another writer got there first. The tmp is hard-linked
+    to the final name (atomic, fails with EEXIST) rather than
+    ``os.replace``d, which would silently clobber the winner."""
+    tmp = _write_tmp(final, doc)
+    try:
+        os.link(tmp, final)
+        return True
+    except FileExistsError:
+        return False
+    finally:
+        os.remove(tmp)
+
+
+def _replace_json(final: str, doc: dict) -> None:
+    """Atomically write ``final`` (last writer wins): readers see the
+    old document or the new one, never a partial file."""
+    os.replace(_write_tmp(final, doc), final)
+
+
 def _write_segment(table_path: str, content: dict) -> str:
     """Persist an immutable manifest segment (its own file subset +
     per-file stats/bloom); returns the segment file name. Segments are
     content-complete and never rewritten, so later commits reference
     them by name at O(1) metadata cost."""
-    seg_dir = _segments_dir(table_path)
-    os.makedirs(seg_dir, exist_ok=True)
     name = f"seg-{uuid.uuid4().hex}.json"
-    tmp = os.path.join(seg_dir, name + ".tmp")
-    with open(tmp, "w") as fh:
-        json.dump(content, fh)
-    os.replace(tmp, os.path.join(seg_dir, name))
+    _replace_json(os.path.join(_segments_dir(table_path), name), content)
     return name
 
 
@@ -151,6 +193,12 @@ def _read_manifest(table_path: str, version: int) -> dict:
     if rows:
         out["rows"] = rows
     return out
+
+
+def _restrict(files, **maps: dict) -> dict:
+    """Each per-file metadata map (stats, bloom, rows) cut down to
+    ``files`` — the shape of a segment or an inline manifest."""
+    return {k: {f: m[f] for f in files if f in m} for k, m in maps.items()}
 
 
 def _data_files(table_path: str) -> set[str]:
@@ -302,8 +350,6 @@ def snapshot_write(
         # item 4); the manifest log's extensions have no Delta
         # translation, so asking for them on a table that already IS
         # Delta is an error, never a silent semantic drop
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
         extras = {
             "stats_cols": stats_cols,
             "bloom_cols": bloom_cols,
@@ -359,7 +405,6 @@ def snapshot_write(
     else:
         pub = published_versions(table_path)
         base_v = pub[-1] if pub else None
-    prev_segments: list[str] | None = None
     prev: dict | None = None
     if mode == "append" and base_v is not None:
         prev = _read_manifest(table_path, base_v)
@@ -369,9 +414,6 @@ def snapshot_write(
         # completed (footer-backfilled) so an append onto a legacy
         # pre-row-count base commits a fully-counted manifest
         rows.update(_complete_rows(table_path, prev))
-        prev_segments = _read_manifest_raw(table_path, base_v).get(
-            "segments"
-        )
     else:
         live = []
     for f in new_files:
@@ -394,60 +436,26 @@ def snapshot_write(
     }
     if segmented:
         segs: list[str] = []
-        if mode == "append" and live:
-            if prev_segments:
-                segs.extend(prev_segments)  # O(1) reuse, never rewritten
+        if prev is not None and live:
+            if prev.get("segments"):
+                segs.extend(prev["segments"])  # O(1) reuse, never rewritten
             else:
                 # inline base: convert its full state into ONE segment
                 # (one-time O(files) cost; every later append is O(delta))
-                assert prev is not None
-                segs.append(
-                    _write_segment(
-                        table_path,
-                        {
-                            "files": list(prev["files"]),
-                            "stats": prev.get("stats", {}),
-                            "bloom": prev.get("bloom", {}),
-                            # rows was completed from prev above
-                            "rows": {
-                                f: rows[f] for f in prev["files"]
-                            },
-                        },
-                    )
-                )
+                segs.append(_write_segment(table_path, {
+                    "files": list(live),
+                    **_restrict(live, stats=stats, bloom=bloom, rows=rows),
+                }))
         if new_files:
-            segs.append(
-                _write_segment(
-                    table_path,
-                    {
-                        "files": sorted(new_files),
-                        "stats": {
-                            f: stats[f] for f in new_files if f in stats
-                        },
-                        "bloom": {
-                            f: bloom[f] for f in new_files if f in bloom
-                        },
-                        "rows": {
-                            f: rows[f] for f in new_files if f in rows
-                        },
-                    },
-                )
-            )
+            segs.append(_write_segment(table_path, {
+                "files": sorted(new_files),
+                **_restrict(new_files, stats=stats, bloom=bloom, rows=rows),
+            }))
         manifest["segments"] = segs
     else:
         manifest["files"] = sorted(set(live) | set(new_files))
-        if stats:
-            manifest["stats"] = {
-                f: stats[f] for f in manifest["files"] if f in stats
-            }
-        if bloom:
-            manifest["bloom"] = {
-                f: bloom[f] for f in manifest["files"] if f in bloom
-            }
-        if rows:
-            manifest["rows"] = {
-                f: rows[f] for f in manifest["files"] if f in rows
-            }
+        meta = _restrict(manifest["files"], stats=stats, bloom=bloom, rows=rows)
+        manifest.update({k: m for k, m in meta.items() if m})
     if staged_id is not None:
         manifest["staged"] = staged_id
     if branch is not None:
@@ -459,41 +467,112 @@ def snapshot_write(
 
 
 def _commit_manifest(table_path: str, version: int, manifest: dict) -> None:
-    """Atomically publish ``manifest`` as ``version`` — put-if-absent.
-
-    The tmp file is hard-linked to the final name (atomic, fails with
-    EEXIST if any other writer got there first) rather than
-    ``os.replace``d (which would silently clobber the winner). A
-    losing writer raises :class:`SnapshotConflictError`; its data
-    files stay on disk, unreferenced by any manifest, until
-    ``remove_orphans`` reclaims them.
+    """Atomically publish ``manifest`` as ``version`` — put-if-absent
+    (:func:`_put_if_absent`). A losing writer raises
+    :class:`SnapshotConflictError`; its data files stay on disk,
+    unreferenced by any manifest, until ``remove_orphans`` reclaims
+    them.
     """
-    final = _manifest_file(table_path, version)
-    tmp = final + f".{os.getpid()}.{id(manifest)}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
+    if not _put_if_absent(_manifest_file(table_path, version), manifest):
         raise SnapshotConflictError(
             f"version {version} at {table_path!r} was committed by "
             f"another writer; re-read the table state and retry"
-        ) from None
-    finally:
-        os.remove(tmp)
+        )
+
+
+def _commit_copy(table_path: str, target: dict, mode: str, **provenance) -> int:
+    """Commit the next version as a metadata-only copy of the resolved
+    manifest ``target`` — its files, stats and bloom, no data file
+    moves — tagged with ``mode`` and ``provenance``; returns the new
+    version. Row counts are always complete: a legacy target's
+    per-file counts are backfilled from footers here, so the new
+    commit (and everything downstream) is metadata-only countable."""
+    vs = versions(table_path)
+    new_version = vs[-1] + 1 if vs else 0
+    manifest = {
+        "version": new_version,
+        "mode": mode,
+        **provenance,
+        "committed_at": time.time(),
+        "files": target["files"],
+    }
+    manifest.update({k: target[k] for k in ("stats", "bloom") if target.get(k)})
+    manifest["rows"] = _complete_rows(table_path, target)
+    _commit_manifest(table_path, new_version, manifest)
+    return new_version
 
 
 def published_versions(table_path: str) -> list[int]:
     """Versions visible on "main": every committed version except
     STAGED ones (write-audit-publish snapshots not yet published)
     and BRANCH commits (visible only through their branch ref)."""
+    # top-level keys only: the raw manifest, never its segments
     return [
         v
         for v in versions(table_path)
         if not (
-            {"staged", "branch"} & _read_manifest(table_path, v).keys()
+            {"staged", "branch"} & _read_manifest_raw(table_path, v).keys()
         )
     ]
+
+
+def _resolve(table_path: str, version: int | None = None) -> tuple[int, dict]:
+    """``(version, resolved manifest)`` under :func:`read_snapshot`'s
+    contract, shared by every reader, planner and ref operation:
+    ``None`` means main's published head, so no default ever lands on
+    unpublished WAP data or a branch commit; an empty log, a log with
+    no published version, or an unknown (expired or never committed)
+    version raises ``ValueError``."""
+    vs = versions(table_path)
+    if not vs:
+        raise ValueError(f"no snapshots at {table_path}")
+    if version is None:
+        pub = published_versions(table_path)
+        if not pub:
+            raise ValueError(
+                f"no published snapshots at {table_path} "
+                f"(staged-only history; publish or read by version)"
+            )
+        version = pub[-1]
+    elif version not in vs:
+        raise ValueError(
+            f"version {version} not in {vs} (expired or never committed)"
+        )
+    return version, _read_manifest(table_path, version)
+
+
+def _scan(
+    spark: SparkSession,
+    table_path: str,
+    files: list[str],
+    residual=None,
+    merge_schema: bool = False,
+) -> DataFrame:
+    """The one scan every snapshot read ends in: Catalyst gets exactly
+    ``files`` (table-relative or absolute, as a clone's are), with the
+    exact ``residual`` filter on surviving rows. An empty plan reads
+    the directory's schema with zero rows, so a fully pruned read
+    still has its columns."""
+    if files:
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        df = reader.parquet(*[os.path.join(table_path, f) for f in files])
+    else:
+        df = spark.read.parquet(table_path).limit(0)
+    return df if residual is None else df.filter(residual)
+
+
+def _plan(
+    table_path: str, version: int | None, key: str, keep
+) -> tuple[list[str], int]:
+    """The one manifest planner: the resolved version's live files
+    whose per-file ``key`` metadata (``stats`` or ``bloom``) passes
+    ``keep`` — a file with none recorded gets ``{}``, which every
+    predicate keeps. Returns ``(planned_files, total_live_files)``."""
+    _v, m = _resolve(table_path, version)
+    meta = m.get(key, {})
+    return [f for f in m["files"] if keep(meta.get(f, {}))], len(m["files"])
 
 
 def publish_staged(table_path: str, staged_id: str) -> int:
@@ -505,51 +584,19 @@ def publish_staged(table_path: str, staged_id: str) -> int:
     ``ValueError`` when no staged snapshot carries ``staged_id``."""
     staged_v = None
     for v in versions(table_path):
-        if _read_manifest(table_path, v).get("staged") == staged_id:
+        if _read_manifest_raw(table_path, v).get("staged") == staged_id:
             staged_v = v  # latest wins if re-staged
     if staged_v is None:
         raise ValueError(
             f"no staged snapshot with id {staged_id!r} at {table_path!r}"
         )
-    target = _read_manifest(table_path, staged_v)
-    vs = versions(table_path)
-    new_version = vs[-1] + 1
-    manifest = {
-        "version": new_version,
-        "mode": "publish",
-        "published_from": staged_v,
-        "staged_id": staged_id,
-        "committed_at": time.time(),
-        "files": target["files"],
-    }
-    if target.get("stats"):
-        manifest["stats"] = target["stats"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
-    # always complete: publishing a legacy staged snapshot backfills
-    # its per-file counts from footers, so the published commit (and
-    # everything downstream) is metadata-only countable
-    manifest["rows"] = _complete_rows(table_path, target)
-    _commit_manifest(table_path, new_version, manifest)
-    return new_version
-
-
-def _current_published_version(table_path: str) -> int:
-    """Latest PUBLISHED version, with :func:`read_snapshot`'s error
-    contract: maintenance ops (OPTIMIZE, rewrite_data_files) must
-    read the same head a plain read would — indexing a staged-only
-    log would silently rewrite unpublished WAP data, and an empty
-    log must raise the same ``ValueError``, not a bare IndexError."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    pub = published_versions(table_path)
-    if not pub:
-        raise ValueError(
-            f"no published snapshots at {table_path} "
-            f"(staged-only history; publish or read by version)"
-        )
-    return pub[-1]
+    return _commit_copy(
+        table_path,
+        _read_manifest(table_path, staged_v),
+        "publish",
+        published_from=staged_v,
+        staged_id=staged_id,
+    )
 
 
 def read_snapshot(
@@ -562,22 +609,8 @@ def read_snapshot(
     Column pruning and filter pushdown apply per-file as with any
     parquet scan."""
     if _backend(spark, table_path) == "delta":
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
         return _fmt.delta_read(spark, table_path, version)
-    if version is None:
-        v = _current_published_version(table_path)
-    else:
-        v = version
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs} (expired or never committed)")
-    files = _read_manifest(table_path, v)["files"]
-    if not files:
-        return spark.read.parquet(table_path).limit(0)
-    return spark.read.parquet(*[os.path.join(table_path, f) for f in files])
+    return _scan(spark, table_path, _resolve(table_path, version)[1]["files"])
 
 
 def plan_pruned_files(
@@ -592,20 +625,7 @@ def plan_pruned_files(
     ``col`` intersects ``[lo, hi]``. Files without recorded stats
     for ``col`` are kept (pruning must never drop a candidate).
     Returns ``(planned_files, total_live_files)``."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    m = _read_manifest(table_path, v)
-    stats = m.get("stats", {})
-    planned = []
-    for f in m["files"]:
-        rng = stats.get(f, {}).get(col)
-        if rng is None or not (hi < rng[0] or lo > rng[1]):
-            planned.append(f)
-    return planned, len(m["files"])
+    return plan_pruned_files_multi(table_path, {col: (lo, hi)}, version)
 
 
 def read_snapshot_pruned(
@@ -624,20 +644,7 @@ def read_snapshot_pruned(
     the same job hive partitioning does for dates, but driven by
     footer stats on ANY clustered column, no directory layout
     needed."""
-    import pyspark.sql.functions as F
-
-    planned, _total = plan_pruned_files(table_path, col, lo, hi, version)
-    if not planned:
-        return (
-            spark.read.parquet(table_path)
-            .limit(0)
-            .filter(F.col(col).between(lo, hi))
-        )
-    return (
-        spark.read.parquet(
-            *[os.path.join(table_path, f) for f in planned]
-        ).filter(F.col(col).between(lo, hi))
-    )
+    return read_snapshot_pruned_multi(spark, table_path, {col: (lo, hi)}, version)
 
 
 def read_snapshot_incremental(
@@ -647,27 +654,18 @@ def read_snapshot_incremental(
     to_version: int | None = None,
 ) -> DataFrame:
     """Iceberg incremental-scan semantics: read ONLY the data files
-    ADDED after ``since_version`` up to ``to_version`` (default
-    latest) — the input an incremental consumer (downstream ETL, a
-    backfill, a CDC-less append feed) processes per cycle. A
+    ADDED after ``since_version`` up to ``to_version`` (default:
+    main's published head) — the input an incremental consumer
+    (downstream ETL, a backfill, a CDC-less append feed) processes
+    per cycle. A
     metadata-only diff of the two manifests' file lists; cost is
     proportional to the files appended, never the table. Overwritten
     files (removed then re-added) count as added — same as Iceberg's
     append-scan over an overwrite boundary."""
-    vs = versions(table_path)
-    if since_version not in vs:
-        raise ValueError(f"version {since_version} not in {vs}")
-    v_to = (published_versions(table_path) or vs)[-1] if to_version is None else to_version
-    if v_to not in vs:
-        raise ValueError(f"version {v_to} not in {vs}")
-    base = set(_read_manifest(table_path, since_version)["files"])
-    now = _read_manifest(table_path, v_to)["files"]
-    added = [f for f in now if f not in base]
-    if not added:
-        return spark.read.parquet(table_path).limit(0)
-    return spark.read.parquet(
-        *[os.path.join(table_path, f) for f in added]
-    )
+    _v, base = _resolve(table_path, since_version)
+    _v, now = _resolve(table_path, to_version)
+    seen = set(base["files"])
+    return _scan(spark, table_path, [f for f in now["files"] if f not in seen])
 
 
 def plan_pruned_files_multi(
@@ -682,26 +680,14 @@ def plan_pruned_files_multi(
     clustering makes every file's footer range tight on every
     clustered column simultaneously, so an N-dimensional range query
     prunes multiplicatively instead of on one leading column."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    m = _read_manifest(table_path, v)
-    stats = m.get("stats", {})
-    planned = []
-    for f in m["files"]:
-        fstats = stats.get(f, {})
-        keep = True
-        for col, (lo, hi) in preds.items():
-            rng = fstats.get(col)
-            if rng is not None and (hi < rng[0] or lo > rng[1]):
-                keep = False
-                break
-        if keep:
-            planned.append(f)
-    return planned, len(m["files"])
+
+    def intersects(fstats: dict) -> bool:
+        return all(
+            c not in fstats or not (hi < fstats[c][0] or lo > fstats[c][1])
+            for c, (lo, hi) in preds.items()
+        )
+
+    return _plan(table_path, version, "stats", intersects)
 
 
 def read_snapshot_pruned_multi(
@@ -723,11 +709,14 @@ def read_snapshot_pruned_multi(
         operator.and_,
         [F.col(c).between(lo, hi) for c, (lo, hi) in preds.items()],
     )
-    if not planned:
-        return spark.read.parquet(table_path).limit(0).filter(residual)
-    return spark.read.parquet(
-        *[os.path.join(table_path, f) for f in planned]
-    ).filter(residual)
+    return _scan(spark, table_path, planned, residual)
+
+
+def _carried(manifest: dict, key: str) -> list[str]:
+    """Columns the manifest records per-file ``key`` metadata for
+    (``stats`` or ``bloom``) — what a rewrite carries over by default
+    so the table keeps its skipping surface."""
+    return sorted({c for per_file in manifest.get(key, {}).values() for c in per_file})
 
 
 def optimize_zorder(
@@ -769,18 +758,11 @@ def optimize_zorder(
     layout (the rewrite is one fresh segment either way)."""
     from aws_lakehouse_spark.layout import zorder_code
 
-    cur_v = _current_published_version(table_path)
-    cur_m = _read_manifest(table_path, cur_v)
+    _v, cur_m = _resolve(table_path)
     if stats_cols is None:
-        carried = {
-            c for fstats in cur_m.get("stats", {}).values() for c in fstats
-        }
-        stats_cols = sorted(set(col_ranges) | carried)
+        stats_cols = sorted(set(col_ranges) | set(_carried(cur_m, "stats")))
     if bloom_cols is None:
-        carried_bloom = {
-            c for fbloom in cur_m.get("bloom", {}).values() for c in fbloom
-        }
-        bloom_cols = sorted(carried_bloom)
+        bloom_cols = _carried(cur_m, "bloom")
 
     current = read_snapshot(spark, table_path)
     clustered = (
@@ -820,17 +802,10 @@ def rewrite_data_files(
     tables run the real ``OPTIMIZE`` (Delta sizes output files
     itself, so ``target_files`` does not apply there)."""
     if _backend(spark, table_path) == "delta":
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
         return _fmt.delta_rewrite_data_files(spark, table_path)
-    cur_v = _current_published_version(table_path)
-    cur_m = _read_manifest(table_path, cur_v)
-    stats_cols = sorted(
-        {c for fstats in cur_m.get("stats", {}).values() for c in fstats}
-    )
-    bloom_cols = sorted(
-        {c for fbloom in cur_m.get("bloom", {}).values() for c in fbloom}
-    )
+    _v, cur_m = _resolve(table_path)
+    stats_cols = _carried(cur_m, "stats")
+    bloom_cols = _carried(cur_m, "bloom")
     current = read_snapshot(spark, table_path)
     v = snapshot_write(
         spark,
@@ -946,20 +921,12 @@ def plan_bloom_pruned_files(
     ``value``. Files without a recorded bloom for ``col`` are kept
     (pruning must never drop a candidate). Returns
     ``(planned_files, total_live_files)``."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    m = _read_manifest(table_path, v)
-    blooms = m.get("bloom", {})
-    planned = []
-    for f in m["files"]:
-        hx = blooms.get(f, {}).get(col)
-        if hx is None or _bloom_maybe_contains(hx, value):
-            planned.append(f)
-    return planned, len(m["files"])
+    return _plan(
+        table_path,
+        version,
+        "bloom",
+        lambda fbloom: col not in fbloom or _bloom_maybe_contains(fbloom[col], value),
+    )
 
 
 def read_snapshot_bloom_pruned(
@@ -978,15 +945,7 @@ def read_snapshot_bloom_pruned(
     import pyspark.sql.functions as F
 
     planned, _total = plan_bloom_pruned_files(table_path, col, value, version)
-    if not planned:
-        return (
-            spark.read.parquet(table_path)
-            .limit(0)
-            .filter(F.col(col) == value)
-        )
-    return spark.read.parquet(
-        *[os.path.join(table_path, f) for f in planned]
-    ).filter(F.col(col) == value)
+    return _scan(spark, table_path, planned, F.col(col) == value)
 
 
 def expire_snapshots(
@@ -1016,7 +975,7 @@ def expire_snapshots(
         if v in keep:
             continue
         if older_than_s is not None:
-            if now - _read_manifest(table_path, v)["committed_at"] < older_than_s:
+            if now - _read_manifest_raw(table_path, v)["committed_at"] < older_than_s:
                 continue
         os.remove(_manifest_file(table_path, v))
         expired.append(v)
@@ -1039,77 +998,77 @@ def remove_orphans(
 
     ``older_than_seconds`` mirrors Iceberg's ``older_than`` and
     applies to EVERY candidate — unreferenced data files,
-    unreferenced segment .json files, and segment .json.tmp debris —
-    because the log supports concurrent writers: a younger
+    unreferenced segment .json files, ``*.tmp`` debris anywhere in
+    the log, and ``__stage.<uuid>/`` directories a writer left
+    behind when it died between its parquet write and its rename
+    loop — because the log supports concurrent writers: a younger
     unreferenced file may belong to an in-flight commit (part files
     and segments land BEFORE the put-if-absent manifest commit that
-    references them), and sweeping one makes that commit permanently
-    unreadable. Pass 0 only when no writer can be in flight (e.g.
-    single-writer test harnesses reclaiming just-expired files)."""
+    references them; a stage directory is written before either),
+    and sweeping one makes that commit permanently unreadable. A
+    stage directory's age is that of the newest entry under it, so
+    a long-running write keeps its own stage alive. Pass 0 only when
+    no writer can be in flight (e.g. single-writer test harnesses
+    reclaiming just-expired files). ``removed_segments`` counts all
+    reclaimed metadata debris (segments and tmp files)."""
     live: set[str] = set()
     live_segments: set[str] = set()
     for v in versions(table_path):
-        live |= set(_read_manifest(table_path, v)["files"])
-        live_segments |= set(
-            _read_manifest_raw(table_path, v).get("segments", [])
-        )
-    # the same older_than gate protects DATA files: a concurrent
-    # snapshot_write lands its part files before its manifest commit,
-    # so a fresh unreferenced part file may be about to become live
-    now = time.time()
-    orphans = []
-    for f in sorted(_data_files(table_path) - live):
-        path = os.path.join(table_path, f)
-        try:
-            if now - os.path.getmtime(path) <= older_than_seconds:
-                continue
-        except OSError:
-            continue  # raced with a concurrent writer/sweeper
-        orphans.append(f)
-    for f in orphans:
-        try:
-            os.remove(os.path.join(table_path, f))
-        except FileNotFoundError:
-            pass  # a concurrent sweep got there first
-    # manifest segments referenced by no live manifest (their
-    # manifests were expired) are metadata orphans — same contract
+        m = _read_manifest(table_path, v)  # keeps its segment list
+        live |= set(m["files"])
+        live_segments |= set(m.get("segments", []))
     seg_dir = _segments_dir(table_path)
-    seg_orphans: list[str] = []
-    if os.path.isdir(seg_dir):
-        # the log supports CONCURRENT writers (put-if-absent
-        # commits), so a fresh segment file may belong to an
-        # in-flight commit: a .json.tmp about to be os.replace-d,
-        # or a renamed .json whose manifest commit hasn't landed
-        # yet (it is unreferenced only for that window — sweeping
-        # it would make the subsequent commit permanently
-        # unreadable). Only sweep files older than a grace period,
-        # mirroring Iceberg's remove_orphan_files(older_than=...)
-        # contract, which applies the age gate to ALL candidates.
-        now = time.time()
-        for f in sorted(os.listdir(seg_dir)):
-            path = os.path.join(seg_dir, f)
-            is_candidate = (
-                f.endswith(".json") and f not in live_segments
-            ) or f.endswith(".json.tmp")
-            if not is_candidate:
-                continue
-            try:
-                age = now - os.path.getmtime(path)
-            except OSError:
-                continue  # raced with the writer's os.replace
-            if age > older_than_seconds:
-                seg_orphans.append(f)
-        for f in seg_orphans:
-            try:
-                os.remove(os.path.join(seg_dir, f))
-            except FileNotFoundError:
-                pass  # a concurrent sweep got there first
-    return {
-        "op": "remove_orphans",
-        "applied": True,
-        "removed_files": len(orphans),
-        "removed_segments": len(seg_orphans),
+    metadata: list[str] = []
+    for root, _dirs, names in os.walk(_log_path(table_path)):
+        for f in names:
+            if f.endswith(".tmp") or (
+                root == seg_dir and f.endswith(".json") and f not in live_segments
+            ):
+                metadata.append(os.path.join(root, f))
+    candidates = {
+        "removed_files": [
+            os.path.join(table_path, f)
+            for f in sorted(_data_files(table_path) - live)
+        ],
+        "removed_segments": sorted(metadata),
+        "removed_stage_dirs": [
+            os.path.join(table_path, f)
+            for f in sorted(os.listdir(table_path))
+            if f.startswith("__stage.")
+        ],
     }
+    now = time.time()
+    out: dict = {"op": "remove_orphans", "applied": True}
+    for key, paths in candidates.items():
+        doomed = []
+        for path in paths:
+            age = _age_seconds(path, now)
+            if age is not None and age > older_than_seconds:
+                doomed.append(path)
+        for path in doomed:
+            if os.path.isdir(path):
+                shutil.rmtree(path, ignore_errors=True)
+            else:
+                try:
+                    os.remove(path)
+                except FileNotFoundError:
+                    pass  # a concurrent sweep got there first
+        out[key] = len(doomed)
+    return out
+
+
+def _age_seconds(path: str, now: float) -> float | None:
+    """Seconds since ``path`` — for a directory, anything under it —
+    last changed; None when it vanished mid-sweep (raced with a
+    concurrent writer's rename or another sweeper)."""
+    try:
+        newest = os.path.getmtime(path)
+        for root, dirs, files in os.walk(path):
+            for name in dirs + files:
+                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
+    except OSError:
+        return None
+    return now - newest
 
 
 def _version_row_count(
@@ -1147,15 +1106,10 @@ def delete_where(
     """
     import pyspark.sql.functions as F  # noqa: F401 (Column coercion)
 
-    pub = published_versions(table_path)
-    vs = versions(table_path)
-    if not pub and not vs:
-        # preserve the pre-manifest-sum error contract: a table with
-        # no snapshots is a ValueError, not a bare IndexError from
-        # versions()[-1]
-        raise ValueError(f"no snapshots at {table_path}")
-    base_v = pub[-1] if pub else vs[-1]
-    current = read_snapshot(spark, table_path)
+    # one resolved version is both read and counted, so a commit
+    # landing in between cannot skew rows_before
+    base_v, base = _resolve(table_path)
+    current = _scan(spark, table_path, base["files"])
     cond = predicate if not isinstance(predicate, str) else F.expr(predicate)
     # Iceberg/Delta DELETE removes rows where the predicate is TRUE;
     # rows where it evaluates NULL (three-valued logic, e.g. a
@@ -1209,18 +1163,8 @@ def read_snapshot_evolved(
     Plain ``read_snapshot`` hands Catalyst one file list and lets
     parquet's own schema resolution pick a winner; this variant sets
     ``mergeSchema`` so heterogeneous manifests read correctly."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    files = _read_manifest(table_path, v)["files"]
-    if not files:
-        return spark.read.parquet(table_path).limit(0)
-    return spark.read.option("mergeSchema", "true").parquet(
-        *[os.path.join(table_path, f) for f in files]
-    )
+    files = _resolve(table_path, version)[1]["files"]
+    return _scan(spark, table_path, files, merge_schema=True)
 
 
 def merge_into(
@@ -1274,8 +1218,6 @@ def merge_into(
     import pyspark.sql.functions as F
 
     if _backend(spark, table_path) == "delta":
-        from aws_lakehouse_spark.sources import format_backend as _fmt
-
         if when_matched_update is not None:
             raise ValueError(
                 "custom when_matched_update assignments are a "
@@ -1368,29 +1310,11 @@ def rollback_to(table_path: str, version: int) -> int:
     audit, and the restore itself is one more commit that readers
     pick up atomically. Metadata-only: no data files move or rewrite,
     so a restore of a petabyte table costs one manifest write.
-    Returns the newly committed version."""
-    vs = versions(table_path)
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    target = _read_manifest(table_path, version)
-    new_version = vs[-1] + 1
-    manifest = {
-        "version": new_version,
-        "mode": "rollback",
-        "rolled_back_to": version,
-        "committed_at": time.time(),
-        "files": target["files"],
-    }
-    if target.get("stats"):
-        # carry the target's per-file stats so a restored table keeps
-        # its min/max scan pruning
-        manifest["stats"] = target["stats"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
-    # restoring a legacy version backfills its counts from footers
-    manifest["rows"] = _complete_rows(table_path, target)
-    _commit_manifest(table_path, new_version, manifest)
-    return new_version
+    Returns the newly committed version. The restore carries the
+    target's per-file stats and bloom, so a restored table keeps its
+    scan pruning."""
+    _v, target = _resolve(table_path, version)
+    return _commit_copy(table_path, target, "rollback", rolled_back_to=version)
 
 
 def clone_snapshot(
@@ -1414,42 +1338,25 @@ def clone_snapshot(
     for its clones, exactly as VACUUM on a Delta source breaks its
     shallow clones.
     """
-    vs = versions(src_table)
-    if not vs:
-        raise ValueError(f"no snapshots at {src_table}")
-    v = (published_versions(src_table) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
+    v, src = _resolve(src_table, version)
     if versions(dst_table):
         raise ValueError(f"clone target {dst_table!r} already has snapshots")
-    src = _read_manifest(src_table, v)
     src_root = os.path.abspath(src_table)
-    # absolute refs: read_snapshot's os.path.join(dst, f) returns f
-    # unchanged when f is absolute, so the clone's reads, appends and
+    # absolute refs: _scan's os.path.join(dst, f) returns f unchanged
+    # when f is absolute, so the clone's reads, appends and
     # copy-on-write DML work with no special-casing anywhere
     remap = {f: os.path.join(src_root, f) for f in src["files"]}
-    os.makedirs(_log_path(dst_table), exist_ok=True)
-    manifest = {
-        "version": 0,
-        "mode": "clone",
-        "cloned_from": {"table": src_root, "version": v},
-        "committed_at": time.time(),
+    # rows completed against the SOURCE (absolute refs resolve there),
+    # then remapped: a clone of a legacy table is fully counted from birth
+    target = {
         "files": sorted(remap.values()),
+        "rows": {remap[f]: n for f, n in _complete_rows(src_table, src).items()},
     }
-    if src.get("stats"):
-        manifest["stats"] = {
-            remap[f]: s for f, s in src["stats"].items() if f in remap
-        }
-    if src.get("bloom"):
-        manifest["bloom"] = {
-            remap[f]: b for f, b in src["bloom"].items() if f in remap
-        }
-    # completed against the SOURCE (absolute refs resolve there), then
-    # remapped: a clone of a legacy table is fully counted from birth
-    src_rows = _complete_rows(src_table, src)
-    manifest["rows"] = {remap[f]: src_rows[f] for f in src["files"]}
-    _commit_manifest(dst_table, 0, manifest)
-    return 0
+    for key in ("stats", "bloom"):
+        target[key] = {remap[f]: m for f, m in src.get(key, {}).items() if f in remap}
+    return _commit_copy(
+        dst_table, target, "clone", cloned_from={"table": src_root, "version": v}
+    )
 
 
 def tag_snapshot(
@@ -1457,62 +1364,61 @@ def tag_snapshot(
 ) -> int:
     """Attach an immutable named tag (Iceberg tag semantics — the
     ``audit-ready``/``prod-validated`` bookmark workflow) to a
-    snapshot version (default: latest). Tags live next to the
-    manifests and commit put-if-absent like them: re-tagging an
-    existing name raises :class:`SnapshotConflictError` rather than
-    silently moving a published label. Returns the tagged version."""
-    vs = versions(table_path)
-    if not vs:
-        raise ValueError(f"no snapshots at {table_path}")
-    v = (published_versions(table_path) or vs)[-1] if version is None else version
-    if v not in vs:
-        raise ValueError(f"version {v} not in {vs}")
-    if "/" in name or name.startswith("."):
-        raise ValueError(f"invalid tag name {name!r}")
-    tags_dir = os.path.join(_log_path(table_path), "tags")
-    os.makedirs(tags_dir, exist_ok=True)
-    final = os.path.join(tags_dir, f"{name}.json")
-    tmp = final + f".{os.getpid()}.tmp"
-    with open(tmp, "w") as fh:
-        json.dump({"name": name, "version": v, "tagged_at": time.time()}, fh)
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
+    snapshot version (default: main's published head). Tags live
+    next to the manifests and commit put-if-absent like them:
+    re-tagging an existing name raises :class:`SnapshotConflictError`
+    rather than silently moving a published label. Returns the
+    tagged version."""
+    v, _m = _resolve(table_path, version)
+    doc = {"name": name, "version": v, "tagged_at": time.time()}
+    if not _put_if_absent(_ref_file(table_path, "tag", name), doc):
         raise SnapshotConflictError(
             f"tag {name!r} already exists at {table_path!r}"
-        ) from None
-    finally:
-        os.remove(tmp)
+        )
     return v
 
 
 def resolve_tag(table_path: str, name: str) -> int:
     """Tag name -> snapshot version (for ``read_snapshot(...,
     version=resolve_tag(...))`` — time travel by name)."""
-    path = os.path.join(_log_path(table_path), "tags", f"{name}.json")
-    try:
-        with open(path) as fh:
-            return int(json.load(fh)["version"])
-    except FileNotFoundError:
-        raise ValueError(f"unknown tag {name!r} at {table_path!r}") from None
+    return int(_read_ref(table_path, "tag", name)["version"])
 
 
 def list_tags(table_path: str) -> dict[str, int]:
     """All tags as name -> version."""
-    tags_dir = os.path.join(_log_path(table_path), "tags")
-    if not os.path.isdir(tags_dir):
+    return _list_refs(table_path, "tag")
+
+
+_REF_DIRS = {"tag": "tags", "branch": "branches"}
+
+
+def _ref_file(table_path: str, kind: str, name: str) -> str:
+    """Path of the ``kind`` ('tag' or 'branch') ref called ``name``;
+    a name that could escape the ref directory raises ValueError."""
+    if "/" in name or name.startswith("."):
+        raise ValueError(f"invalid {kind} name {name!r}")
+    return os.path.join(_log_path(table_path), _REF_DIRS[kind], f"{name}.json")
+
+
+def _read_ref(table_path: str, kind: str, name: str) -> dict:
+    try:
+        with open(_ref_file(table_path, kind, name)) as fh:
+            return json.load(fh)
+    except FileNotFoundError:
+        raise ValueError(f"unknown {kind} {name!r} at {table_path!r}") from None
+
+
+def _list_refs(table_path: str, kind: str) -> dict[str, int]:
+    d = os.path.join(_log_path(table_path), _REF_DIRS[kind])
+    if not os.path.isdir(d):
         return {}
     out = {}
-    for f in sorted(os.listdir(tags_dir)):
+    for f in sorted(os.listdir(d)):
         if f.endswith(".json"):
-            with open(os.path.join(tags_dir, f)) as fh:
-                d = json.load(fh)
-            out[d["name"]] = int(d["version"])
+            with open(os.path.join(d, f)) as fh:
+                ref = json.load(fh)
+            out[ref["name"]] = int(ref["version"])
     return out
-
-
-def _branches_dir(table_path: str) -> str:
-    return os.path.join(_log_path(table_path), "branches")
 
 
 def create_branch(
@@ -1525,37 +1431,15 @@ def create_branch(
     ``ValueError`` instead of silently stealing the name. Branch
     commits land via ``snapshot_write(..., branch=name)``; main
     readers never see them until :func:`fast_forward_main`."""
-    vs = versions(table_path)
-    if version is None:
-        pub = published_versions(table_path)
-        if not pub:
-            raise ValueError(f"no published snapshots at {table_path!r}")
-        version = pub[-1]
-    if version not in vs:
-        raise ValueError(f"version {version} not in {vs}")
-    if "/" in name or name.startswith("."):
-        raise ValueError(f"invalid branch name {name!r}")
-    os.makedirs(_branches_dir(table_path), exist_ok=True)
-    final = os.path.join(_branches_dir(table_path), f"{name}.json")
-    tmp = final + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "name": name,
-                "version": version,
-                "fork_base": version,
-                "updated_at": time.time(),
-            },
-            fh,
-        )
-    try:
-        os.link(tmp, final)
-    except FileExistsError:
-        raise ValueError(
-            f"branch {name!r} already exists at {table_path!r}"
-        ) from None
-    finally:
-        os.remove(tmp)
+    version, _m = _resolve(table_path, version)
+    doc = {
+        "name": name,
+        "version": version,
+        "fork_base": version,
+        "updated_at": time.time(),
+    }
+    if not _put_if_absent(_ref_file(table_path, "branch", name), doc):
+        raise ValueError(f"branch {name!r} already exists at {table_path!r}")
     return version
 
 
@@ -1570,48 +1454,27 @@ def _move_branch(
     follows is the put-if-absent race arbiter; the ref move itself is
     an atomic replace (manifests are immutable, so the ref always
     names a fully committed snapshot)."""
-    final = os.path.join(_branches_dir(table_path), f"{name}.json")
     if fork_base is None:
-        with open(final) as fh:
-            fork_base = json.load(fh).get("fork_base")
-    tmp = final + f".tmp.{uuid.uuid4().hex}"
-    with open(tmp, "w") as fh:
-        json.dump(
-            {
-                "name": name,
-                "version": version,
-                "fork_base": fork_base,
-                "updated_at": time.time(),
-            },
-            fh,
-        )
-    os.replace(tmp, final)
+        fork_base = _read_ref(table_path, "branch", name).get("fork_base")
+    _replace_json(
+        _ref_file(table_path, "branch", name),
+        {
+            "name": name,
+            "version": version,
+            "fork_base": fork_base,
+            "updated_at": time.time(),
+        },
+    )
 
 
 def resolve_branch(table_path: str, name: str) -> int:
     """Branch name -> current head version."""
-    path = os.path.join(_branches_dir(table_path), f"{name}.json")
-    try:
-        with open(path) as fh:
-            return int(json.load(fh)["version"])
-    except FileNotFoundError:
-        raise ValueError(
-            f"unknown branch {name!r} at {table_path!r}"
-        ) from None
+    return int(_read_ref(table_path, "branch", name)["version"])
 
 
 def list_branches(table_path: str) -> dict[str, int]:
     """All branches as name -> head version."""
-    d = _branches_dir(table_path)
-    if not os.path.isdir(d):
-        return {}
-    out = {}
-    for f in sorted(os.listdir(d)):
-        if f.endswith(".json"):
-            with open(os.path.join(d, f)) as fh:
-                j = json.load(fh)
-            out[j["name"]] = int(j["version"])
-    return out
+    return _list_refs(table_path, "branch")
 
 
 def read_branch(
@@ -1640,14 +1503,7 @@ def fast_forward_main(table_path: str, name: str) -> int:
     a silent overwrite. On success the branch's fork base advances
     to the new main head, so continue-then-merge-again flows keep
     working."""
-    ref_path = os.path.join(_branches_dir(table_path), f"{name}.json")
-    try:
-        with open(ref_path) as fh:
-            ref = json.load(fh)
-    except FileNotFoundError:
-        raise ValueError(
-            f"unknown branch {name!r} at {table_path!r}"
-        ) from None
+    ref = _read_ref(table_path, "branch", name)
     head = int(ref["version"])
     fork_base = ref.get("fork_base")
     pub = published_versions(table_path)
@@ -1658,24 +1514,13 @@ def fast_forward_main(table_path: str, name: str) -> int:
             f"from the fork base {fork_base} to {main_head}; rebase or "
             f"merge explicitly"
         )
-    target = _read_manifest(table_path, head)
-    vs = versions(table_path)
-    new_version = vs[-1] + 1
-    manifest = {
-        "version": new_version,
-        "mode": "publish",
-        "fast_forwarded_from": name,
-        "published_from": head,
-        "committed_at": time.time(),
-        "files": target["files"],
-    }
-    if target.get("stats"):
-        manifest["stats"] = target["stats"]
-    if target.get("bloom"):
-        manifest["bloom"] = target["bloom"]
-    # fast-forwarding a legacy branch head backfills its counts
-    manifest["rows"] = _complete_rows(table_path, target)
-    _commit_manifest(table_path, new_version, manifest)
+    new_version = _commit_copy(
+        table_path,
+        _read_manifest(table_path, head),
+        "publish",
+        fast_forwarded_from=name,
+        published_from=head,
+    )
     # continue-then-merge-again: the branch keeps its head, but its
     # fork base advances to the commit main just gained
     _move_branch(table_path, name, head, fork_base=new_version)
@@ -1735,13 +1580,9 @@ def add_table_constraint(
     contract that keeps one bad upstream batch from poisoning every
     consumer downstream. Constraints live in the table's log
     directory, so enforcement follows the table, not the caller."""
-    os.makedirs(_log_path(table_path), exist_ok=True)
     cons = table_constraints(table_path)
     cons[name] = predicate_sql
-    tmp = _constraints_file(table_path) + ".tmp"
-    with open(tmp, "w") as fh:
-        json.dump(cons, fh)
-    os.replace(tmp, _constraints_file(table_path))
+    _replace_json(_constraints_file(table_path), cons)
 
 
 def checked_snapshot_write(

@@ -1526,3 +1526,181 @@ def test_delta_merge_rejects_manifest_style_delete_condition(spark, tmp_path):
             on=["id"],
             when_matched_delete="__src_op = 'D'",
         )
+
+
+def test_remove_orphans_reclaims_aged_stage_dirs(spark, table_path):
+    """A snapshot_write that dies between its parquet write and its
+    rename loop leaves a __stage.<uuid>/ directory behind. Once it has
+    aged past the grace period it is debris and is swept; a younger
+    one, or an old one with a fresh entry deep inside (a long-running
+    write), may belong to an in-flight writer and is kept."""
+    snapshots.snapshot_write(spark, _df(spark, 0, 10), table_path, "overwrite")
+    old = time.time() - snapshots._ORPHAN_TMP_GRACE_SECONDS - 60
+
+    def stage(name: str, aged: bool, fresh_leaf: bool = False) -> str:
+        d = os.path.join(table_path, name)
+        leaf_dir = os.path.join(d, "_temporary", "0")
+        os.makedirs(leaf_dir)
+        paths = [
+            os.path.join(d, "part-0.parquet"),
+            os.path.join(leaf_dir, "part-1.parquet"),
+        ]
+        for p in paths:
+            with open(p, "wb") as fh:
+                fh.write(b"PAR1")
+        if aged:
+            for p in paths + [leaf_dir, os.path.dirname(leaf_dir), d]:
+                os.utime(p, (old, old))
+        if fresh_leaf:
+            os.utime(paths[1], None)
+        return d
+
+    dead = stage("__stage.deadbeef", aged=True)
+    young = stage("__stage.inflight", aged=False)
+    slow = stage("__stage.slowjob", aged=True, fresh_leaf=True)
+    res = snapshots.remove_orphans(table_path)
+    assert not os.path.exists(dead)
+    assert os.path.exists(young) and os.path.exists(slow)
+    assert res["removed_stage_dirs"] == 1
+    assert snapshots.read_snapshot(spark, table_path).count() == 10
+    # with no writer in flight, a zero grace reclaims every stage
+    res = snapshots.remove_orphans(table_path, older_than_seconds=0)
+    assert res["removed_stage_dirs"] == 2
+    assert not any(f.startswith("__stage.") for f in os.listdir(table_path))
+    assert snapshots.read_snapshot(spark, table_path).count() == 10
+
+
+@pytest.mark.parametrize("segmented", [False, True])
+def test_commit_fault_keeps_previous_snapshot(
+    spark, table_path, monkeypatch, segmented
+):
+    """Fault injection on the commit protocol: a writer that dies
+    after its part files (and, segmented, its segment) land but before
+    the put-if-absent manifest commit leaves the log at the previous
+    version, its debris is reclaimable, and the next write commits
+    the next version (Iceberg's commit contract)."""
+    snapshots.snapshot_write(
+        spark, _df(spark, 0, 10), table_path, "overwrite", segmented=segmented
+    )
+    files_before = snapshots._data_files(table_path)
+    seg_dir = snapshots._segments_dir(table_path)
+    segs_before = set(os.listdir(seg_dir)) if segmented else set()
+
+    def die(*_args, **_kwargs):
+        raise OSError("injected: writer died before its manifest commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(snapshots, "_commit_manifest", die)
+        with pytest.raises(OSError, match="injected"):
+            snapshots.snapshot_write(
+                spark, _df(spark, 10, 15), table_path, "append",
+                segmented=segmented,
+            )
+    stranded = snapshots._data_files(table_path) - files_before
+    assert stranded, "the part files should have landed before the commit"
+    stranded_segs = (
+        set(os.listdir(seg_dir)) - segs_before if segmented else set()
+    )
+    assert bool(stranded_segs) == segmented
+    # readers still see exactly the previous snapshot
+    assert snapshots.versions(table_path) == [0]
+    assert snapshots.read_snapshot(spark, table_path).count() == 10
+    res = snapshots.remove_orphans(table_path, older_than_seconds=0)
+    assert res["removed_files"] == len(stranded)
+    assert res["removed_segments"] == len(stranded_segs)
+    assert snapshots._data_files(table_path) == files_before
+    if segmented:
+        assert set(os.listdir(seg_dir)) == segs_before
+    # the next write commits the next version on the intact base
+    assert snapshots.snapshot_write(
+        spark, _df(spark, 20, 23), table_path, "append", segmented=segmented
+    ) == 1
+    assert snapshots.read_snapshot(spark, table_path).count() == 13
+
+
+def test_staged_only_log_has_no_default_version(spark, table_path, tmp_path):
+    """One default-version contract: on a log holding only a staged
+    write-audit-publish snapshot, every reader, planner and ref
+    operation that defaults its version raises read_snapshot's
+    ValueError instead of landing on the unpublished batch; an
+    explicit version still audits the stage."""
+    v = snapshots.snapshot_write(
+        spark, _df(spark, 0, 10).coalesce(1), table_path, "append",
+        stats_cols=["id"], bloom_cols=["id"], staged_id="batch-1",
+    )
+    with pytest.raises(ValueError) as ref:
+        snapshots.read_snapshot(spark, table_path)
+    expected = str(ref.value)
+    calls = {
+        "plan_pruned_files": lambda: snapshots.plan_pruned_files(
+            table_path, "id", 0, 5
+        ),
+        "plan_pruned_files_multi": lambda: snapshots.plan_pruned_files_multi(
+            table_path, {"id": (0, 5)}
+        ),
+        "plan_bloom_pruned_files": lambda: snapshots.plan_bloom_pruned_files(
+            table_path, "id", 3
+        ),
+        "read_snapshot_pruned": lambda: snapshots.read_snapshot_pruned(
+            spark, table_path, "id", 0, 5
+        ),
+        "read_snapshot_pruned_multi": lambda: snapshots.read_snapshot_pruned_multi(
+            spark, table_path, {"id": (0, 5)}
+        ),
+        "read_snapshot_bloom_pruned": lambda: snapshots.read_snapshot_bloom_pruned(
+            spark, table_path, "id", 3
+        ),
+        "read_snapshot_evolved": lambda: snapshots.read_snapshot_evolved(
+            spark, table_path
+        ),
+        "read_snapshot_incremental": lambda: snapshots.read_snapshot_incremental(
+            spark, table_path, v, to_version=None
+        ),
+        "tag_snapshot": lambda: snapshots.tag_snapshot(table_path, "latest"),
+        "clone_snapshot": lambda: snapshots.clone_snapshot(
+            table_path, str(tmp_path / "clone")
+        ),
+    }
+    for name, call in calls.items():
+        with pytest.raises(ValueError) as got:
+            call()
+        assert str(got.value) == expected, name
+    assert snapshots.list_tags(table_path) == {}
+    assert snapshots.versions(str(tmp_path / "clone")) == []
+    # an explicit version still reads the stage
+    assert snapshots.read_snapshot(spark, table_path, v).count() == 10
+    assert snapshots.read_snapshot_pruned(
+        spark, table_path, "id", 0, 4, version=v
+    ).count() == 5
+    assert snapshots.plan_bloom_pruned_files(table_path, "id", 3, v)[1] == 1
+    assert snapshots.read_snapshot_evolved(spark, table_path, v).count() == 10
+    assert snapshots.tag_snapshot(table_path, "audit", v) == v
+
+
+def test_maintenance_expiry_on_manifest_table_in_delta_session(
+    spark, table_path, monkeypatch
+):
+    """Maintenance decides the format per table: a table carrying the
+    manifest log gets a manifest expiry even when the session's
+    extensions name Delta, instead of a VACUUM that cannot apply to
+    it (Delta runs only where a _delta_log exists and the runtime is
+    usable)."""
+    from aws_lakehouse_spark.sources import maintenance
+
+    for lo in (0, 10, 20):
+        snapshots.snapshot_write(spark, _df(spark, lo, lo + 5), table_path, "append")
+    real_get = spark.conf.get
+
+    def get(key, *default):
+        if key == "spark.sql.extensions":
+            return "io.delta.sql.DeltaSparkSessionExtension"
+        return real_get(key, *default)
+
+    monkeypatch.setattr(spark.conf, "get", get)
+    res = maintenance.expire_snapshots(
+        spark, "not_a_catalog_table", retain_days=0, table_path=table_path
+    )
+    assert res["applied"] is True
+    assert res["expired_versions"] == [0, 1]
+    assert snapshots.versions(table_path) == [2]
+    assert snapshots.read_snapshot(spark, table_path).count() == 15
